@@ -27,15 +27,25 @@ object Engine {
       .config("spark.sql.shuffle.partitions", cores)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      // NOT set: adaptive.coalescePartitions.initialPartitionNum. Tried
-      // at 8× cores in round 4 to chase q22's 271 MB memory-spill at
-      // the 100× smoke; measured WORSE (q22 median 17.4 s → 21.8 s,
-      // spill 271 MB → 4.2 GB at 100×): the collect_list aggregation is
-      // object-hash/sort-based, and many small sorters spill more than
-      // 32 fat ones under the same 32-thread memory pool. On a real
-      // cluster initialPartitionNum scales with executors; locally the
-      // static 32 is the measured optimum.
+      // NOT set: adaptive.coalescePartitions.initialPartitionNum. A higher
+      // initial count makes q22's collect_list aggregation spill more, not
+      // less (at 8× cores and the 100× corpus: median 17.4 s → 21.8 s,
+      // spill 271 MB → 4.2 GB): it is object-hash/sort-based, and many
+      // small sorters spill more than a few fat ones under the same
+      // memory pool. On a cluster initialPartitionNum scales with
+      // executors; locally one partition per core is the measured optimum.
       .config("spark.sql.session.timeZone", "UTC")
+      // Spark keeps generated classes in one JVM-wide LRU cache, sized
+      // from this static conf when codegen first runs. The default of 100
+      // is below one query pass: q111/q197/q268/q22/q101 alone need ~210
+      // classes, so every pass evicts and recompiles all of them with
+      // Janino and then runs them cold in the JIT. The 278-query suite at
+      // sf0.01 generates ~3,960 distinct classes in a cold pass and
+      // 80-180 new ones per warm pass. An LRU cache just smaller than a
+      // cyclic working set misses on every lookup, so the size leaves 2×
+      // headroom over the whole suite. A cached class holds ~9 KB of
+      // Metaspace, so a full cache costs ~70 MB.
+      .config("spark.sql.codegen.cache.maxEntries", "8192")
       // Some events.parquet generations carry INT64 TIMESTAMP(NANOS), which
       // Spark's reader rejects outright; this conf surfaces those as
       // epoch-nanos long instead. It is a no-op on timestamp[us]/[ms] files.

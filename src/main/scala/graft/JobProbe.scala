@@ -1,7 +1,9 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd,
-  SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent,
+  SparkListenerJobEnd, SparkListenerJobStart}
+import org.apache.spark.sql.execution.SQLExecution
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import scala.collection.concurrent.TrieMap
 
 /** Per-JOB timing probe (optimization-round measurement tool, guide §1):
@@ -16,14 +18,30 @@ import scala.collection.concurrent.TrieMap
   */
 object JobProbe {
   private class JobLog extends SparkListener {
-    val t0 = TrieMap.empty[Int, Long]
+    val t0 = TrieMap.empty[Int, (Long, String)]
     val rows = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    // SQL jobs leave `callSite.short` unset, and AQE submits its query
+    // stages from a pool thread, so their stages are named after that
+    // thread. The call site that started the SQL execution (e.g.
+    // "collect at Quantile.scala:120") is its description; a job outside
+    // any execution falls back to its result stage, created last.
+    private val execSite = TrieMap.empty[String, String]
+    override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+      case s: SparkListenerSQLExecutionStart =>
+        execSite.put(s.executionId.toString, s.description)
+      case _ =>
+    }
     override def onJobStart(js: SparkListenerJobStart): Unit = {
-      t0.put(js.jobId, System.nanoTime())
+      val site = Option(js.properties)
+        .flatMap(p => Option(p.getProperty(SQLExecution.EXECUTION_ID_KEY)))
+        .flatMap(execSite.get)
+        .orElse(js.stageInfos.maxByOption(_.stageId).map(_.name))
+        .getOrElse("?")
+      t0.put(js.jobId, (System.nanoTime(), site))
     }
     override def onJobEnd(je: SparkListenerJobEnd): Unit = {
-      t0.remove(je.jobId).foreach { s =>
-        rows.add(f"job ${je.jobId}%3d  ${(System.nanoTime() - s) / 1e9}%7.3f s")
+      t0.remove(je.jobId).foreach { case (s, site) =>
+        rows.add(f"job ${je.jobId}%3d  ${(System.nanoTime() - s) / 1e9}%7.3f s  $site")
       }
     }
   }

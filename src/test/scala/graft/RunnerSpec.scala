@@ -18,13 +18,17 @@ class RunnerSpec extends AnyFunSuite with SparkSpec {
         ran += "b"
       }),
       Job("m", Monthly, (_, _) => ran += "m"),
-      Job("dead", Daily, (_, _) => sys.error("always down"))
+      Job("dead", Daily, (_, _) => sys.error("always down")),
+      // deterministic failures: analysis error and a `require` guard
+      Job("missing", Daily, (s, _) => s.table("no_such_table")),
+      Job("guard", Daily, (_, _) => require(false, "bad input"))
     )
     val res = Runner.runCadence(spark, jobs, Daily, "2024-06-01",
       maxRetries = 3)
     assert(ran.toSeq == Seq("a@2024-06-01", "b")) // monthly not run
     assert(res.map(r => (r.name, r.ok, r.attempts)) ==
-      Seq(("a", true, 1), ("b", true, 3), ("dead", false, 4)))
-    assert(res.last.error.contains("always down"))
+      Seq(("a", true, 1), ("b", true, 3), ("dead", false, 4),
+        ("missing", false, 1), ("guard", false, 1)))
+    assert(res(2).error.contains("always down"))
   }
 }
